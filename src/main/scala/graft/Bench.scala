@@ -181,14 +181,12 @@ object Bench {
     // would run the measured pass in a corrupted JVM.
     // SPARK_GRAFT_BENCH_SUBSET: comma-separated query names to bench only
     // those — regression-triage mode, so iterating on one slow query
-    // doesn't pay the full 61-query sweep. The driver's per-round run
-    // leaves it unset and sweeps everything.
+    // doesn't pay the full sweep. Unset, it sweeps everything; an
+    // unknown name fails the run.
     val subset = sys.env.get("SPARK_GRAFT_BENCH_SUBSET")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    subset.foreach(s => (s -- SparkEntry.queries.keySet).foreach(u =>
-      System.err.println(s"[bench] unknown query in SPARK_GRAFT_BENCH_SUBSET: $u")))
-    val benchQueries = SparkEntry.queries
-      .filter { case (k, _) => subset.forall(_.contains(k)) }
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
+    val benchQueries = SparkEntry.registry.select(subset.getOrElse(Set.empty))
+      .map(d => d.name -> d.run).toMap
 
     // Per-query executor stats (see QueryStatsListener): created BEFORE
     // the asset builds since round 14, so asset rows — the single biggest

@@ -3,28 +3,12 @@ package graft
 import graft.similarity.{Ivf, IvfPq, PcaPower, Pq}
 import graft.text.Bpe
 
-/** Per-run capture of trained ANN models (IVF centroids, PQ codebooks) so
-  * [[SparkEntry.oracleSql]] can hand the driver a DuckDB replay of the
-  * SEARCH path of quantizer-backed queries. Training itself stays
-  * spec-pinned (Lloyd's isn't SQL); but once a query has trained its
-  * model, the model is just numbers — inlining them as SQL literals makes
-  * the assignment/probe/ADC/rank chain fully hash-checkable, the same
-  * recipe that flipped m09/m10 (seeded hyperplanes as literals).
-  *
-  * [[Verify]] dumps `oracle_sql.json` AFTER running every query and
-  * `oracleSql` is a def, so each query deposits the exact model instance
-  * its output was computed with; the replay can never race a retrain
-  * (queries that train separately — m12 vs m41 vs m74 — capture under
-  * their own key, because double summation order across partitions can
-  * move centroids by ulps between `Ivf.train` calls).
-  */
-object OracleCapture {
-  private val store = scala.collection.concurrent.TrieMap.empty[String, Any]
-  def put(name: String, model: Any): Unit = store.put(name, model)
-  def get[T](name: String): Option[T] = store.get(name).map(_.asInstanceOf[T])
-}
-
 /** DuckDB SQL builders that replay ANN search over an inlined model.
+  * Training stays spec-pinned (Lloyd's isn't SQL), but once a query has
+  * trained its model and put it in its [[Capture]] slot, the model is
+  * just numbers: inlining them as SQL literals makes the assignment/
+  * probe/ADC/rank chain fully hash-checkable, the same recipe as the
+  * seeded hyperplanes of m09/m10.
   *
   * Bitwise discipline (selection steps — argmin cell, PQ code assignment,
   * top-k ranks — only agree if the scores agree exactly):
@@ -935,59 +919,4 @@ object OracleModelSql {
       "abs(mean_conf - frac_correct) AS gap, " +
       "abs(mean_conf - frac_correct) * n / class_total AS ece_term FROM fin"
   }
-
-  private type LangCap = (Seq[String], Seq[Seq[Long]], Long)
-  private type LangCapSup = (Seq[String], Seq[Seq[Long]], Long, Seq[Long])
-
-  def captured: Map[String, String] =
-    OracleCapture.get[Ivf.Model]("m12_ann_ivf").map(m => "m12_ann_ivf" -> ivfTopK(m, 5, 4)).toMap ++
-      OracleCapture.get[(Ivf.Model, Long)]("m33_semantic_dedup").map { case (m, off) =>
-        "m33_semantic_dedup" -> semanticDedup(m, off, 0.99, 2) }.toMap ++
-      OracleCapture.get[Ivf.Model]("m41_cluster_quota").map(m => "m41_cluster_quota" -> ivfClusterQuota(m, 10)).toMap ++
-      OracleCapture.get[Ivf.Model]("m74_ann_tuning_sweep").map(m => "m74_ann_tuning_sweep" -> ivfSweep(m, 5, Seq(1, 2, 4, 16))).toMap ++
-      OracleCapture.get[Pq.Model]("m37_ann_pq").map(m => "m37_ann_pq" -> pqAdc(m, 5)).toMap ++
-      OracleCapture.get[IvfPq.Model]("m38_ann_ivfpq").map(m => "m38_ann_ivfpq" -> ivfPqTopK(m, 5, 4)).toMap ++
-      OracleCapture.get[IvfPq.Model]("m84_ann_stored_probe").map(m => "m84_ann_stored_probe" -> ivfPqTopK(m, 5, 4)).toMap ++
-      OracleCapture.get[IvfPq.Model]("m81_ann_ivfpq_batch").map(m =>
-        "m81_ann_ivfpq_batch" -> ivfPqTopK(m, 3, 2, probeWhere = "TRUE")).toMap ++
-      OracleCapture.get[IvfPq.Model]("m47_ann_rerank").map(m => "m47_ann_rerank" -> ivfPqRerank(m, 5, 4, 5)).toMap ++
-      OracleCapture.get[(Seq[(Long, Long, Long)], Long)]("m53_mmr_rerank").map { case (picks, off) =>
-        "m53_mmr_rerank" -> mmrCertificate(picks, off, k = 5, lambda = 0.7, candMult = 10) }.toMap ++
-      OracleCapture.get[PcaPower.IterState]("m63_pca_top_component").map(st => "m63_pca_top_component" -> pcaTopComponent(st)).toMap ++
-      OracleCapture.get[Seq[(String, String)]]("m40_bpe_tokens")
-        .filter(_.nonEmpty).map(ms => "m40_bpe_tokens" -> bpeTokenStats(ms)).toMap ++
-      OracleCapture.get[Seq[(String, String)]]("m79_tokenizer_fertility")
-        .filter(_.nonEmpty).map(ms => "m79_tokenizer_fertility" -> bpeFertility(ms)).toMap ++
-      OracleCapture.get[Seq[Double]]("m83_quality_classifier")
-        .map(w => "m83_quality_classifier" -> qualityClassifier(w)).toMap ++
-      OracleCapture.get[Seq[Double]]("m86_classifier_roc")
-        .map(w => "m86_classifier_roc" -> classifierRoc(w)).toMap ++
-      OracleCapture.get[Seq[Double]]("m98_calibration")
-        .map(w => "m98_calibration" -> calibration(w)).toMap ++
-      OracleCapture.get[Seq[Double]]("m101_gate_agreement")
-        .map(w => "m101_gate_agreement" -> gateAgreement(w)).toMap ++
-      OracleCapture.get[Seq[Double]]("m118_dawid_skene")
-        .map(w => "m118_dawid_skene" -> dawidSkene(w)).toMap ++
-      OracleCapture.get[Seq[(String, String)]]("m88_token_coverage")
-        .filter(_.nonEmpty).map(ms => "m88_token_coverage" -> bpeTokenCoverage(ms)).toMap ++
-      OracleCapture.get[Seq[(Boolean, String)]]("m139_wordpiece_tokens")
-        .filter(_.nonEmpty).map(ps => "m139_wordpiece_tokens" -> wordPieceStats(ps)).toMap ++
-      OracleCapture.get[Seq[(Boolean, String)]]("m143_wordpiece_fertility")
-        .filter(_.nonEmpty).map(ps => "m143_wordpiece_fertility" -> wordPieceFertility(ps)).toMap ++
-      OracleCapture.get[Seq[(String, Double)]]("m135_unigram_tokens")
-        .filter(_.nonEmpty).map(ps => "m135_unigram_tokens" -> unigramTokenStats(ps)).toMap ++
-      OracleCapture.get[Seq[(String, Double)]]("m136_unigram_fertility")
-        .filter(_.nonEmpty).map(ps => "m136_unigram_fertility" -> unigramFertility(ps)).toMap ++
-      OracleCapture.get[LangCap]("m137_langid_score")
-        .filter(_._1.nonEmpty).map { case (cl, wq, off) =>
-          "m137_langid_score" -> langIdScore(cl, wq, off) }.toMap ++
-      OracleCapture.get[LangCapSup]("m67_lang_confusion")
-        .filter(_._1.nonEmpty).map { case (cl, wq, off, sup) =>
-          "m67_lang_confusion" -> langIdConfusion(cl, wq, off, sup) }.toMap ++
-      OracleCapture.get[LangCap]("m146_langid_labeled")
-        .filter(_._1.nonEmpty).map { case (cl, wq, off) =>
-          "m146_langid_labeled" -> langIdLabeledScore(cl, wq, off) }.toMap ++
-      OracleCapture.get[LangCap]("m147_langid_calibration")
-        .filter(_._1.nonEmpty).map { case (cl, wq, off) =>
-          "m147_langid_calibration" -> langIdCalibration(cl, wq, off) }.toMap
 }

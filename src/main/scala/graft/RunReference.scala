@@ -13,8 +13,12 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.RunReference [rawRoot] [warehouseDir]
   */
 object RunReference {
+
+  /** Where the reference's raw Day_Wise CSVs are mounted. */
+  val DefaultRawRoot = "/root/reference/data/raw"
+
   def main(args: Array[String]): Unit = {
-    val rawRoot = args.headOption.getOrElse("/root/reference/data/raw")
+    val rawRoot = args.headOption.getOrElse(DefaultRawRoot)
     val wh = args.lift(1).getOrElse(s"/tmp/graft-reference-wh-${ProcessHandle.current().pid()}")
     // GraftSession.builder: the backfill's evidence rows sit in the same
     // BENCH_sf1 table as BackfillProbe's, so both must measure under the

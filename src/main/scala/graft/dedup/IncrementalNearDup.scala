@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * corpus fingerprint ACROSS ingest JVMs), so a second ingest pays only
   * the batch-sized probe: batch grams shuffle, the standing index is a
   * sorted-parquet scan, and the pair space is bounded by dfCap × batch
-  * grams. tools/ProbeTiming records the probe-1 vs probe-2 times at
-  * gen-1.0 for BENCH_sf1.md.
+  * grams. BENCH_sf1.md records the resulting m72 scale curve (sub-1×
+  * from gen-1.0 to gen-30: the stored index leaves only the probe).
   */
 object IncrementalNearDup {
 

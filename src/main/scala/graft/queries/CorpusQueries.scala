@@ -546,6 +546,8 @@ object CorpusQueries {
       Tables.documents(s, dir).select("doc_id", "source"),
       keyCol = "doc_id", fractions = SplitFractions)
 
+  private[graft] val bpeTokenStatsMerges = new graft.Capture[Seq[(String, String)]]
+
   /** BPE tokenizer-token accounting (m40): train merges on the corpus
     * word table (distributed — one word-count exchange, see
     * [[graft.text.Bpe.trainDistributed]]), then count real tokenizer
@@ -562,9 +564,11 @@ object CorpusQueries {
   def bpeTokenStats(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val model = bpeModel(s, dir)
-    graft.OracleCapture.put("m40_bpe_tokens", model.merges)
+    bpeTokenStatsMerges.put(model.merges)
     graft.text.Bpe.tokenStats(docs, model)
   }
+
+  private[graft] val tokenCoverageMerges = new graft.Capture[Seq[(String, String)]]
 
   /** Tokenizer vocabulary-usage report (m88): per realized BPE token, its
     * corpus count, frequency rank, share and cumulative share — the
@@ -574,7 +578,7 @@ object CorpusQueries {
     * curve. */
   def tokenCoverage(s: SparkSession, dir: String): DataFrame = {
     val model = bpeModel(s, dir)
-    graft.OracleCapture.put("m88_token_coverage", model.merges)
+    tokenCoverageMerges.put(model.merges)
     graft.text.Bpe.tokenCoverage(Tables.documents(s, dir), model)
   }
 
@@ -599,6 +603,8 @@ object CorpusQueries {
       })
     }
 
+  private[graft] val wordPieceTokenStatsPieces = new graft.Capture[Seq[(Boolean, String)]]
+
   /** WordPiece tokenizer-token accounting (m139): train likelihood-scored
     * merges on the corpus word table (distributed — the shared
     * [[graft.text.WordTables]] contract), then count MaxMatch tokens and
@@ -613,9 +619,11 @@ object CorpusQueries {
   def wordPieceTokenStats(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val model = wpModel(s, dir)
-    graft.OracleCapture.put("m139_wordpiece_tokens", model.pieces)
+    wordPieceTokenStatsPieces.put(model.pieces)
     graft.text.WordPiece.tokenStats(docs, model)
   }
+
+  private[graft] val wordPieceFertilityPieces = new graft.Capture[Seq[(Boolean, String)]]
 
   /** Per-source WordPiece fertility + UNK rate (m143): the m79/m136
     * report for the third tokenizer family, under the SAME shared model
@@ -627,7 +635,7 @@ object CorpusQueries {
   def wordPieceFertility(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val model = wpModel(s, dir)
-    graft.OracleCapture.put("m143_wordpiece_fertility", model.pieces)
+    wordPieceFertilityPieces.put(model.pieces)
     graft.text.WordPiece.tokenStats(docs, model)
       .join(docs.select("doc_id", "source"), Seq("doc_id"))
       .groupBy("source").agg(
@@ -671,6 +679,8 @@ object CorpusQueries {
       })
     }
 
+  private[graft] val unigramTokensPieces = new graft.Capture[Seq[(String, Double)]]
+
   /** Unigram-LM tokenizer accounting (m135): per-document Viterbi token
     * counts under the EM-trained SentencePiece-style unigram model
     * (Kudo 2018) — the m40 report shape for the OTHER tokenizer family,
@@ -680,21 +690,23 @@ object CorpusQueries {
     * ([[graft.OracleModelSql.unigramTokenStats]]). */
   def unigramTokens(s: SparkSession, dir: String): DataFrame = {
     val model = uniModel(s, dir)
-    graft.OracleCapture.put("m135_unigram_tokens", model.pieces)
+    unigramTokensPieces.put(model.pieces)
     graft.text.UnigramLm.tokenStats(Tables.documents(s, dir), model)
   }
+
+  private[graft] val unigramFertilityPieces = new graft.Capture[Seq[(String, Double)]]
 
   /** Unigram-tokenizer fertility report (m136): per-source
     * tokens-per-word and chars-per-token under the m135 shared unigram
     * model — the m79 report for the other tokenizer family, so the two
     * tokenizers' per-source budgets sit side by side. Reads the shared
-    * per-corpus model, captures it under its OWN key (the
+    * per-corpus model, captures it in its OWN slot (the
     * no-shared-capture convention). One partial-agg exchange on source;
     * the encode pass is m135's memoized map. */
   def unigramFertility(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val model = uniModel(s, dir)
-    graft.OracleCapture.put("m136_unigram_fertility", model.pieces)
+    unigramFertilityPieces.put(model.pieces)
     fertilityOver(graft.text.UnigramLm.tokenStats(docs, model), docs,
       tokCol = "n_uni_tokens", totalName = "total_uni_tokens")
   }
@@ -748,6 +760,8 @@ object CorpusQueries {
       tokCol = "n_bpe_tokens", totalName = "total_bpe_tokens")
   }
 
+  private[graft] val tokenizerFertilityMerges = new graft.Capture[Seq[(String, String)]]
+
   /** m79 driver query: the RAW fertility report, fully hash-checked —
     * round 11's recursive-CTE encode replay (the m40 flip) made the
     * BPE-dependent token totals themselves DuckDB-recomputable, so the
@@ -755,7 +769,7 @@ object CorpusQueries {
     * superseded; the oracle now recomputes fertility/chars_per_token from
     * the captured merge list ([[graft.OracleModelSql.bpeFertility]]). */
   def tokenizerFertility(s: SparkSession, dir: String): DataFrame = {
-    graft.OracleCapture.put("m79_tokenizer_fertility", bpeModel(s, dir).merges)
+    tokenizerFertilityMerges.put(bpeModel(s, dir).merges)
     tokenizerFertilityRaw(s, dir)
   }
 
@@ -808,7 +822,7 @@ object CorpusQueries {
     * (QualityClassifierSpec pins trainDistributed ≡ train when the
     * sample covers the corpus, and partition-invariant). The
     * no-shared-CAPTURE convention is untouched: every query still puts
-    * the (identical) weights under its OWN key, so each oracle replays
+    * the (identical) weights in its OWN slot, so each oracle replays
     * exactly its run's model.
     *
     * Memo durability contract (DedupAssetsSpec pins all three for both
@@ -880,13 +894,13 @@ object CorpusQueries {
     Tables.documentsSpread(s, dir).select("doc_id", "lang", "text")
       .unionByName(syntheticLangDocs(s, langOff(s, dir)))
 
-  private def langCapture(s: SparkSession, dir: String,
-                          key: String): graft.text.LangId.Model = {
-    val model = langModel(s, dir)
-    graft.OracleCapture.put(key,
-      (model.classes.toSeq, model.quantized.map(_.toSeq).toSeq, langOff(s, dir)))
-    model
-  }
+  /** Language-ID weights as the oracle replays them: classes, quantized
+    * weights and the planted block's id offset. */
+  private[graft] type LangWeights = (Seq[String], Seq[Seq[Long]], Long)
+  private def langWeights(model: graft.text.LangId.Model, off: Long): LangWeights =
+    (model.classes.toSeq, model.quantized.map(_.toSeq).toSeq, off)
+
+  private[graft] val langIdScoreWeights = new graft.Capture[LangWeights]
 
   /** Trained language-ID scoring (m137): the char-n-gram multinomial LR
     * ([[graft.text.LangId]]) over real + planted docs — (doc_id, lang,
@@ -894,7 +908,8 @@ object CorpusQueries {
     * captured so the oracle replays scoring end-to-end from the parquet
     * (the m83 recipe, K classes wide). */
   def langIdScore(s: SparkSession, dir: String): DataFrame = {
-    val model = langCapture(s, dir, "m137_langid_score")
+    val model = langModel(s, dir)
+    langIdScoreWeights.put(langWeights(model, langOff(s, dir)))
     graft.text.LangId.score(langCorpus(s, dir), model)
   }
 
@@ -1001,6 +1016,8 @@ object CorpusQueries {
           labeledSet(s, dir).filter(labeledTrainFilter(labeledOff(s, dir)))))
     }
 
+  private[graft] val langIdLabeledWeights = new graft.Capture[LangWeights]
+
   /** Held-out labeled-set scoring (m146): the m137 scorer under a REAL
     * labeled-data contract — the model trains on the external set's
     * 80% train split (arriving as JSONL through the production reader)
@@ -1010,11 +1027,12 @@ object CorpusQueries {
   def langIdLabeled(s: SparkSession, dir: String): DataFrame = {
     val off = labeledOff(s, dir)
     val model = labeledModel(s, dir)
-    graft.OracleCapture.put("m146_langid_labeled",
-      (model.classes.toSeq, model.quantized.map(_.toSeq).toSeq, off))
+    langIdLabeledWeights.put(langWeights(model, off))
     graft.text.LangId.score(
       labeledSet(s, dir).filter(!labeledTrainFilter(off)), model)
   }
+
+  private[graft] val langIdCalibrationWeights = new graft.Capture[LangWeights]
 
   /** Per-class calibration card (m147): the m98 ECE recipe over the
     * labeled-set model's POSTERIORS — per (predicted class, confidence
@@ -1027,8 +1045,7 @@ object CorpusQueries {
   def langIdCalibration(s: SparkSession, dir: String): DataFrame = {
     val off = labeledOff(s, dir)
     val model = labeledModel(s, dir)
-    graft.OracleCapture.put("m147_langid_calibration",
-      (model.classes.toSeq, model.quantized.map(_.toSeq).toSeq, off))
+    langIdCalibrationWeights.put(langWeights(model, off))
     val scored = graft.text.LangId.scoreCalibrated(labeledSet(s, dir), model)
     val binned = scored
       .select(col("pred_lang"),
@@ -1050,41 +1067,47 @@ object CorpusQueries {
       .drop("class_total")
   }
 
+  private[graft] val qualityClassifierWeights = new graft.Capture[Seq[Double]]
+
   /** Learned quality filter (m83): logistic regression distilled from the
     * m02 gate — bounded deterministic training sample, literal-weights
     * scoring pass; the run's weights are captured so the oracle replays
     * scoring end-to-end from the parquet. */
   def qualityClassifier(s: SparkSession, dir: String): DataFrame = {
     val model = qcModel(s, dir)
-    graft.OracleCapture.put("m83_quality_classifier", model.w.toSeq)
+    qualityClassifierWeights.put(model.w.toSeq)
     graft.text.QualityClassifier.score(Tables.documents(s, dir), model)
   }
+
+  private[graft] val classifierRocWeights = new graft.Capture[Seq[Double]]
 
   /** Classifier operating curve (m86): confusion counts + TPR/FPR/
     * precision per logit threshold — how a rollout picks the cut. Reads
     * the shared per-corpus model ([[qcModel]] — training is
     * deterministic, so the weights are identical to a private train) but
-    * captures them under its OWN key per the no-shared-capture
+    * captures them in its OWN slot per the no-shared-capture
     * convention, and fans each scored row out to the 9-point threshold
     * grid inside its partition. */
   def classifierRoc(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val model = qcModel(s, dir)
-    graft.OracleCapture.put("m86_classifier_roc", model.w.toSeq)
+    classifierRocWeights.put(model.w.toSeq)
     graft.text.QualityClassifier.rocReport(docs, model)
   }
+
+  private[graft] val calibrationWeights = new graft.Capture[Seq[Double]]
 
   /** Calibration / reliability card (m98): per predicted-probability
     * decile, mean predicted p vs observed positive rate + per-bin ECE
     * contribution — certifies whether m83's scores are usable as
     * SAMPLING WEIGHTS (the ROC (m86) only certifies the ranking). Reads
-    * the shared per-corpus model, captured under its own key (the
+    * the shared per-corpus model, captured in its own slot (the
     * no-shared-capture convention), so the oracle replays scoring +
     * binning from this run's exact weights. */
   def calibration(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val model = qcModel(s, dir)
-    graft.OracleCapture.put("m98_calibration", model.w.toSeq)
+    calibrationWeights.put(model.w.toSeq)
     graft.text.QualityClassifier.calibrationReport(docs, model)
   }
 
@@ -1681,6 +1704,8 @@ object CorpusQueries {
       .select("doc_id", "source", "perplexity", "bucket")
   }
 
+  private[graft] val gateAgreementWeights = new graft.Capture[Seq[Double]]
+
   /** Gate-agreement matrix (m101): Cohen's κ between the three quality
     * gates the filtering tier ships — the m02 rule gate, the m83 learned
     * classifier and the CCNet perplexity gate (m89's head+middle
@@ -1694,7 +1719,7 @@ object CorpusQueries {
   def gateAgreement(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val model = qcModel(s, dir)
-    graft.OracleCapture.put("m101_gate_agreement", model.w.toSeq)
+    gateAgreementWeights.put(model.w.toSeq)
     val cls = graft.text.QualityClassifier.score(docs, model)
       .select(col("doc_id"), col("label").as("g_rule"), col("pred").as("g_cls"))
     val ppl = pplBuckets(s, dir)
@@ -1725,6 +1750,8 @@ object CorpusQueries {
       when(pE < 1.0, (pO - pE) / (lit(1.0) - pE)).as("kappa"))
   }
 
+  private[graft] val dawidSkeneWeights = new graft.Capture[Seq[Double]]
+
   /** Dawid–Skene gate fusion (m118): m101's three gate votes (rule /
     * learned / perplexity) pooled by majority-init + one EM step —
     * per-gate sensitivity/specificity against the majority, then every
@@ -1735,7 +1762,7 @@ object CorpusQueries {
   def dawidSkene(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val model = qcModel(s, dir)
-    graft.OracleCapture.put("m118_dawid_skene", model.w.toSeq)
+    dawidSkeneWeights.put(model.w.toSeq)
     val cls = graft.text.QualityClassifier.score(docs, model)
       .select(col("doc_id"), col("label").as("g_rule"), col("pred").as("g_cls"))
     val ppl = pplBuckets(s, dir)
@@ -2501,19 +2528,24 @@ object CorpusQueries {
   def labelConfusions(s: SparkSession, dir: String): DataFrame =
     graft.similarity.LabelCentroids.confusions(labeledVectors(s, dir))
 
+  private[graft] val annRerankModel = new graft.Capture[graft.similarity.IvfPq.Model]
+
   /** Two-stage retrieval (m47): IVF-PQ candidates re-ranked by exact
     * cosine — the billion-scale serving shape (compressed index nominates,
-    * raw vectors re-rank). Rows-only by design (quantizer internals);
-    * RerankSpec pins stage-2 exactness and recall ≥ raw ADC. */
+    * raw vectors re-rank). The oracle replays both stages over the
+    * captured model; RerankSpec pins stage-2 exactness and recall ≥ raw
+    * ADC. */
   def annRerank(s: SparkSession, dir: String): DataFrame = {
     val all = vectors(s, dir)
     val model = graft.similarity.IvfPq.train(all, nlist = 16, m = 8, ksub = 16)
-    graft.OracleCapture.put("m47_ann_rerank", model)
+    annRerankModel.put(model)
     graft.similarity.Rerank.ivfPqRerank(
       all.filter(col("id") < 10), all,
       graft.similarity.IvfPq.encode(all, model), model,
       k = 5, nprobe = 4, candMult = 5)
   }
+
+  private[graft] val mmrRerankPicks = new graft.Capture[(Seq[(Long, Long, Long)], Long)]
 
   /** MMR diversified retrieval (m53) over the perturbed-dup corpus: the
     * re-rank that stops a near-dup-heavy corpus answering every query
@@ -2540,7 +2572,7 @@ object CorpusQueries {
     // running the distributed selection twice.
     val picks = res.orderBy("query_id", "rank").collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
-    graft.OracleCapture.put("m53_mmr_rerank",
+    mmrRerankPicks.put(
       (picks.map(p => (p._1, p._2, p._3)).toSeq, off))
     import s.implicits._
     picks.toSeq.toDF("query_id", "rank", "neighbor_id", "sim", "mmr_score")
@@ -2560,11 +2592,13 @@ object CorpusQueries {
     Ann.lshTopK(all.filter(col("id") < 10), all, k = 5, numPlanes = 4)
   }
 
+  private[graft] val semanticDedupModel = new graft.Capture[(graft.similarity.Ivf.Model, Long)]
+
   /** SemDeDup-style semantic dedup (m33): k-means cells over the
     * perturbed-dup corpus, within-cell cosine ≥ 0.99, drop the non-min id
-    * of each near-dup pair. Rows-only by design (quantizer internals are
-    * not SQL-expressible); SemanticDedupSpec pins planted-dup recall and
-    * precision against the exact brute-force pairs. */
+    * of each near-dup pair. The oracle replays it over the captured
+    * cells; SemanticDedupSpec pins planted-dup recall and precision
+    * against the exact brute-force pairs. */
   def semanticDedup(s: SparkSession, dir: String): DataFrame = {
     val off = vecOff(s, dir)
     val all = withPerturbedDups(vectors(s, dir), off)
@@ -2572,7 +2606,7 @@ object CorpusQueries {
       all, nlist = scaledNlist(all.count()), iters = 2)
     // the fixture offset travels with the model so the SQL replay rebuilds
     // the exact corpus the engine ran on, whatever the organic id range
-    graft.OracleCapture.put("m33_semantic_dedup", (model, off))
+    semanticDedupModel.put((model, off))
     // pair side spread (spreadVecs note): the within-cell cosine scoring
     // ran as 2 AQE-coalesced tasks; per-pair sims + min/max agg are
     // partition-invariant, and the model above trains on the unspread frame
@@ -2580,30 +2614,37 @@ object CorpusQueries {
       spreadVecs(s, dir, all), model, threshold = 0.99)
   }
 
+  private[graft] val annPqModel = new graft.Capture[graft.similarity.Pq.Model]
+
   /** Product-quantized ADC top-k (m37): train codebooks on the corpus,
     * encode to 8 codes/vector (8 bytes vs 256 raw — the compressed store
     * that fits a 100 TB embedding set in executor memory), search by
-    * per-query lookup tables. Rows-only by design (codebook internals are
-    * not SQL-expressible); PqSpec pins recall vs the exact baseline. */
+    * per-query lookup tables. The oracle replays the search over the
+    * captured codebooks; PqSpec pins recall vs the exact baseline. */
   def annPq(s: SparkSession, dir: String): DataFrame = {
     val all = vectors(s, dir)
     val model = graft.similarity.Pq.train(all, m = 8, ksub = 16, iters = 4)
-    graft.OracleCapture.put("m37_ann_pq", model)
+    annPqModel.put(model)
     graft.similarity.Pq.adcTopK(all.filter(col("id") < 10),
       graft.similarity.Pq.encode(all, model), model, k = 5)
   }
 
+  private[graft] val annIvfPqModel = new graft.Capture[graft.similarity.IvfPq.Model]
+
   /** IVF-PQ top-k (m38): the composed billion-scale index — coarse cells
     * bound which rows a probe scans, residual PQ codes bound what each row
-    * costs. Rows-only by design; IvfPqSpec pins full-probe recall, the
+    * costs. The oracle replays the search over the captured model;
+    * IvfPqSpec pins full-probe recall, the
     * nprobe cell bound, and residual-vs-raw codebook quality. */
   def annIvfPq(s: SparkSession, dir: String): DataFrame = {
     val all = vectors(s, dir)
     val model = graft.similarity.IvfPq.train(all, nlist = 16, m = 8, ksub = 16)
-    graft.OracleCapture.put("m38_ann_ivfpq", model)
+    annIvfPqModel.put(model)
     graft.similarity.IvfPq.topK(all.filter(col("id") < 10),
       graft.similarity.IvfPq.encode(all, model), model, k = 5, nprobe = 4)
   }
+
+  private[graft] val annIvfPqBatchModel = new graft.Capture[graft.similarity.IvfPq.Model]
 
   /** Whole-corpus k-NN graph (m81): EVERY vector retrieves its top-3
     * approximate neighbors through [[graft.similarity.IvfPq.topKBatch]] —
@@ -2615,10 +2656,12 @@ object CorpusQueries {
     val all = vectors(s, dir)
     val model = graft.similarity.IvfPq.train(
       all, nlist = scaledNlist(all.count()), m = 8, ksub = 16)
-    graft.OracleCapture.put("m81_ann_ivfpq_batch", model)
+    annIvfPqBatchModel.put(model)
     graft.similarity.IvfPq.topKBatch(
       all, graft.similarity.IvfPq.encode(all, model), model, k = 3, nprobe = 2)
   }
+
+  private[graft] val annStoredProbeModel = new graft.Capture[graft.similarity.IvfPq.Model]
 
   /** Stored-index retrieval (m84): the m38 probe served from the
     * [[graft.similarity.AnnAssets]] persisted IVF-PQ index — train+encode
@@ -2632,10 +2675,12 @@ object CorpusQueries {
     val all = vectors(s, dir)
     val (model, enc) = graft.similarity.AnnAssets.ivfPqIndex(
       s, dir, all, nlist = 16, m = 8, ksub = 16)
-    graft.OracleCapture.put("m84_ann_stored_probe", model)
+    annStoredProbeModel.put(model)
     graft.similarity.IvfPq.topK(all.filter(col("id") < 10), enc, model,
       k = 5, nprobe = 4)
   }
+
+  private[graft] val clusterQuotaModel = new graft.Capture[graft.similarity.Ivf.Model]
 
   /** Cluster-balanced sampling (m41): the diversity-preserving downsample
     * — quota per EMBEDDING cluster instead of per source label, so no
@@ -2643,31 +2688,36 @@ object CorpusQueries {
     * SemDeDup-era sibling of m21's source quota). Pure composition:
     * [[graft.similarity.Ivf]] cells feed [[graft.operators.QuotaSample]]'s
     * pruned sampler; the exchange carries (cell, id, md5) triples only.
-    * Rows-only by design (quantizer); the components are each spec-pinned
-    * and the composition is shape-checked in ClusterQuotaSpec. */
+    * The oracle replays it over the captured cells; the components are
+    * each spec-pinned and the composition is shape-checked in
+    * ClusterQuotaSpec. */
   def clusterQuotaSample(s: SparkSession, dir: String): DataFrame = {
     val all = vectors(s, dir)
     val model = graft.similarity.Ivf.train(all, nlist = 16, iters = 2)
-    graft.OracleCapture.put("m41_cluster_quota", model)
+    clusterQuotaModel.put(model)
     graft.operators.QuotaSample.quotaSample(
       all.select(col("id"), graft.similarity.Ivf.cellId(col("vec"), model).as("cell")),
       groupCol = "cell", keyCol = "id", cap = 10)
   }
 
+  private[graft] val annIvfModel = new graft.Capture[graft.similarity.Ivf.Model]
+
   def annIvf(s: SparkSession, dir: String): DataFrame = {
     val all = vectors(s, dir)
     val model = graft.similarity.Ivf.train(all, nlist = 16, iters = 2)
-    graft.OracleCapture.put("m12_ann_ivf", model)
+    annIvfModel.put(model)
     graft.similarity.Ivf.topK(all.filter(col("id") < 10), all, model,
       k = 5, nprobe = 4)
   }
+
+  private[graft] val annTuningSweepModel = new graft.Capture[graft.similarity.Ivf.Model]
 
   /** IVF recall-vs-nprobe tuning sweep (m74): the curve read before
     * picking a serving nprobe; full probe (nlist) must hit recall 1. */
   def annTuningSweep(s: SparkSession, dir: String): DataFrame = {
     val all = vectors(s, dir)
     val model = graft.similarity.Ivf.train(all, nlist = 16, iters = 2)
-    graft.OracleCapture.put("m74_ann_tuning_sweep", model)
+    annTuningSweepModel.put(model)
     graft.similarity.TuningSweep.ivfRecallCurve(
       all.filter(col("id") < 10), all, model, k = 5,
       nprobes = Seq(1, 2, 4, 16))
@@ -2957,6 +3007,8 @@ object CorpusQueries {
         avg(col("oov_rate")).as("mean_oov_rate"))
   }
 
+  private[graft] val langConfusionWeights = new graft.Capture[(Seq[String], Seq[Seq[Long]], Long, Seq[Long])]
+
   /** Language-ID confusion crosstab (m67): declared `lang` column vs the
     * TRAINED classifier's prediction (re-pointed at m137's model in
     * round 16; previously the en/other stopword heuristic), with
@@ -2964,14 +3016,14 @@ object CorpusQueries {
     * corpus rows expose that the declared tags sit on language-free
     * text, the planted rows pin the diagonal. One partial-agg exchange
     * on (lang, pred_lang); the totals join is language-count-sized and
-    * broadcast. Reads the shared per-corpus model, captured under its
-    * OWN key (the no-shared-capture convention). */
+    * broadcast. Reads the shared per-corpus model, captured in its OWN
+    * slot (the no-shared-capture convention). */
   def langConfusion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val model = langModel(s, dir)
     // m67's capture carries the per-class TRAIN SUPPORT alongside the
     // weights (its own 4-tuple — the no-shared-capture convention)
-    graft.OracleCapture.put("m67_lang_confusion",
+    langConfusionWeights.put(
       (model.classes.toSeq, model.quantized.map(_.toSeq).toSeq,
         langOff(s, dir), model.classCounts.toSeq))
     val p = graft.text.LangId.score(langCorpus(s, dir), model)
@@ -3035,12 +3087,14 @@ object CorpusQueries {
       n, keyCol = "doc_id", weightCol = "n_tokens", k = 200)
   }
 
+  private[graft] val pcaTopComponentState = new graft.Capture[graft.similarity.PcaPower.IterState]
+
   /** Top principal component of the embedding corpus (m63): distributed
     * power iteration, 8 steps — the anisotropy/whitening diagnostic.
     * Captures (μ, v₇) so the final corpus pass is oracle-replayed. */
   def pcaTopComponent(s: SparkSession, dir: String): DataFrame =
     graft.similarity.PcaPower.topComponent(Tables.embeddings(s, dir),
-      captureKey = Some("m63_pca_top_component"))
+      capture = Some(pcaTopComponentState))
 
   /** Similarity-graph PageRank (m62): damped centrality over the m14
     * near-dup pair graph (jaccard ≥ 0.6, symmetrized) — high-rank nodes

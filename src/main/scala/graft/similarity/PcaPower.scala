@@ -59,7 +59,7 @@ object PcaPower {
   def topComponent(vecs: DataFrame, idCol: String = "vec_id",
                    vecCol: String = "embedding",
                    iterations: Int = 8,
-                   captureKey: Option[String] = None): DataFrame = {
+                   capture: Option[graft.Capture[IterState]] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val spark = vecs.sparkSession
     import spark.implicits._
@@ -120,8 +120,7 @@ object PcaPower {
     var eigen = 0.0
     for (it <- 1 to iterations) {
       if (it == iterations)
-        captureKey.foreach(k =>
-          graft.OracleCapture.put(k, IterState(mu.toSeq, v.toSeq)))
+        capture.foreach(_.put(IterState(mu.toSeq, v.toSeq)))
       val sums = Array.tabulate(d) { i =>
         var s = 0.0
         var j = 0

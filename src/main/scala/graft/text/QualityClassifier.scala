@@ -286,14 +286,8 @@ object QualityClassifier {
       (z >= 0.0).cast("long").as("pred"): _*)
   }
 
-  /** Train-then-score with per-run oracle capture (the [[graft.similarity.PcaPower]]
-    * captureKey recipe): the exact weights this run scored with are what
-    * the DuckDB replay inlines. */
-  def trainScore(docs: DataFrame, captureKey: Option[String] = None): DataFrame = {
-    val model = train(docs)
-    captureKey.foreach(k => graft.OracleCapture.put(k, model.w.toSeq))
-    score(docs, model)
-  }
+  /** Train-then-score. */
+  def trainScore(docs: DataFrame): DataFrame = score(docs, train(docs))
 
   /** Decision-threshold grid for [[rocReport]] — data-independent logit
     * cuts (every value exactly representable, so the grid is identical

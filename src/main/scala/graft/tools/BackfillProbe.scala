@@ -33,7 +33,7 @@ object BackfillProbe {
     val amp = args.headOption.map(_.toInt).getOrElse(10)
     require(amp >= 1, s"amp must be >= 1, got $amp")
     val rawOut = args.lift(1).getOrElse(s"/tmp/graft-amp-$amp")
-    val refRoot = args.lift(2).getOrElse("/root/reference/data/raw")
+    val refRoot = args.lift(2).getOrElse(graft.RunReference.DefaultRawRoot)
     val wh = s"/tmp/graft-probe-wh-${ProcessHandle.current().pid()}"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     // GraftSession.builder carries the engine session contract (UTC,

@@ -4,7 +4,7 @@ package graft.tools
   * regenerates the README/COVERAGE totals from the build itself — the
   * round-13 ledger ("706 specs") was correct only because a hand edit
   * kept it correct, and a hand-kept count WILL drift. No SparkSession:
-  * the driver query map holds functions, so constructing it is free.
+  * the query registry holds functions, so constructing it is free.
   * (oracleSql is deliberately NOT counted here: its captured-model
   * entries only materialize after a Verify run, so its static size
   * undercounts — the driver's CORRECTNESS gate is the authority on

@@ -1,14 +1,16 @@
 package graft
 
+import graft.queries.CorpusQueries
 import graft.similarity.{Ivf, IvfPq, Pq}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Pins the trained-model oracle replay plumbing (OracleCapture +
-  * OracleModelSql): the capture registry round-trips models under their
-  * query keys, the SQL builders inline the exact model doubles as
-  * literals, and a real query run deposits its model so oracleSql gains
-  * the entry. The DuckDB side is exercised by the driver (and
-  * tools/oracle_check.py locally) — here we pin the Scala-side contract
-  * the replay depends on. */
+/** Pins the query registry and the trained-model oracle replay plumbing
+  * (Capture slots + OracleModelSql): names are unique, literal oracles
+  * are non-empty, the OracleModelSql renderers inline the exact model
+  * doubles as literals, and a real query run fills its slot so oracleSql
+  * gains the entry. The DuckDB side is exercised by Verify +
+  * tools/oracle_check.py — here we pin the Scala-side contract the
+  * replay depends on. */
 class OracleModelSqlSpec extends SparkSpec {
 
   private val tinyIvf = Ivf.Model(Seq(Seq(1.0, 0.0), Seq(0.0, 0.5)))
@@ -36,33 +38,51 @@ class OracleModelSqlSpec extends SparkSpec {
     ipqSql should include("cb(s, c, cv2)")
   }
 
-  test("capture registry round-trips models and drives captured entries") {
-    OracleCapture.put("spec_probe", tinyIvf)
-    OracleCapture.get[Ivf.Model]("spec_probe") shouldBe Some(tinyIvf)
-    // unknown keys stay absent → no oracle entry is fabricated
-    OracleCapture.get[Ivf.Model]("spec_never_put") shouldBe None
+  test("an unwritten slot yields no oracle; a written one renders it") {
+    val slot = new Capture[Ivf.Model]
+    val oracle = Oracle.replay(slot)(OracleModelSql.ivfTopK(_, k = 5, nprobe = 2))
+    // nothing captured yet → no oracle entry is fabricated
+    oracle.sql shouldBe None
+    slot.put(tinyIvf)
+    oracle.sql shouldBe Some(OracleModelSql.ivfTopK(tinyIvf, k = 5, nprobe = 2))
+    oracle.when(_.nlist > 2).sql shouldBe None
   }
 
-  test("pca run deposits (mu, v7) and the final-pass replay inlines it") {
-    graft.queries.CorpusQueries.pcaTopComponent(spark, sf("sf0.001")).count() should be > 0L
-    val st = OracleCapture.get[graft.similarity.PcaPower.IterState]("m63_pca_top_component")
-    st should not be empty
-    st.get.mu.length shouldBe st.get.v.length
-    val sql = OracleModelSql.captured("m63_pca_top_component")
-    sql should include("FROM embeddings")
-    // the captured iterate appears as a round-trip literal
-    sql should include(st.get.v.head.toString)
-    sql should include("AS eigenvalue")
-    SparkEntry.oracleSql.keySet should contain("m63_pca_top_component")
+  test("the registry rejects duplicate names and unknown selections") {
+    val run: (SparkSession, String) => DataFrame = (s, _) => s.emptyDataFrame
+    val dup = intercept[IllegalArgumentException](Registry(
+      QueryDef("a", run, "SELECT 1"), QueryDef("b", run, "SELECT 2"),
+      QueryDef("a", run, "SELECT 3")))
+    dup.getMessage should include("duplicate query names: a")
+    val unknown = intercept[IllegalArgumentException](
+      SparkEntry.registry.select(Set("q01_scan_project", "q00_no_such_query")))
+    unknown.getMessage should include("unknown queries: q00_no_such_query")
+    SparkEntry.registry.select(Set("q17_daily_counts")).map(_.name) shouldBe
+      Seq("q17_daily_counts")
   }
 
-  test("running the query deposits its model and oracleSql gains the entry") {
-    graft.queries.CorpusQueries.annIvf(spark, sf("sf0.001")).count() should be > 0L
-    val entries = OracleModelSql.captured
-    entries.keySet should contain("m12_ann_ivf")
-    // the entry is live SQL over the embeddings table with 16 inlined cells
-    entries("m12_ann_ivf") should include("FROM embeddings")
-    entries("m12_ann_ivf") should include("range(0, 16)")
-    SparkEntry.oracleSql.keySet should contain("m12_ann_ivf")
+  test("every registered query has one entry and every literal oracle is non-empty") {
+    val defs = SparkEntry.registry.defs
+    defs should have size 203
+    SparkEntry.queries.keySet shouldBe defs.map(_.name).toSet
+    val literals = defs.collect { case QueryDef(n, _, Oracle.Literal(sql)) => n -> sql }
+    literals.size + defs.count(_.oracle.isInstanceOf[Oracle.Replay[_]]) shouldBe defs.size
+    literals.filter(_._2.trim.isEmpty).map(_._1) shouldBe empty
   }
+
+  // m12 inlines trained IVF centroids, m63 the power-iteration state (μ, v₇).
+  private val capturedCases = Seq[(String, () => Option[String])](
+    "m12_ann_ivf" -> (() => CorpusQueries.annIvfModel.get.map(_.centroids.head.head.toString)),
+    "m63_pca_top_component" -> (() => CorpusQueries.pcaTopComponentState.get.map(_.v.head.toString)))
+
+  for ((name, capturedLiteral) <- capturedCases)
+    test(s"after $name runs, its captured entry yields its oracle") {
+      val d = SparkEntry.registry.select(Set(name)).head
+      d.run(spark, sf("sf0.001")).count() should be > 0L
+      val sql = d.oracle.sql.getOrElse(fail(s"$name has no oracle after running"))
+      sql should include("FROM embeddings")
+      // the captured model appears as a round-trip literal
+      sql should include(capturedLiteral().get)
+      SparkEntry.oracleSql(name) shouldBe sql
+    }
 }

@@ -1,29 +1,38 @@
 package graft.pipeline
 
-import graft.SparkSpec
+import graft.{RunReference, SparkSpec}
 import graft.io.Sources
 import graft.operators.RetailOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Goldens against the REFERENCE'S OWN raw data (read-only at
-  * /root/reference/data/raw/Day_Wise). Numbers come from the reference's
+/** Goldens against the REFERENCE'S OWN raw data (read-only under
+  * [[RunReference.DefaultRawRoot]]/Day_Wise). Numbers come from the reference's
   * committed run logs and profiling (BASELINE.md): this proves the S1
   * source reads the real files byte-for-byte compatibly and the operator
   * semantics reproduce the observed pipeline outputs, not just our
   * fixtures. */
 class ReferenceDataSpec extends SparkSpec {
 
-  private val root = "/root/reference/data/raw"
+  private val root = RunReference.DefaultRawRoot
+
+  /** One raw day; fails naming the root when the reference data is not
+    * mounted, instead of Spark's PATH_NOT_FOUND trace. */
+  private def rawDay(date: String): DataFrame = {
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root)))
+      fail(s"reference raw data not found at $root")
+    Sources.rawEventsCsv(spark, root, date)
+  }
 
   test("S1 reads the real 2019-10-23 day: 16,159 rows (ingest log golden)") {
-    val df = Sources.rawEventsCsv(spark, root, "2019-10-23")
+    val df = rawDay("2019-10-23")
     df.count() shouldBe 16159 // logs/dag_id=load_raw_data_from_s3/...: "Loaded 16159 records"
     // schema contract holds on real data: no corrupt/null keys
     df.filter(col("event_time").isNull || col("user_id").isNull).count() shouldBe 0
   }
 
   test("2019-10-05 profile goldens: users/products/brands/categories/event mix") {
-    val df = Sources.rawEventsCsv(spark, root, "2019-10-05").cache()
+    val df = rawDay("2019-10-05").cache()
     try {
       df.count() shouldBe 15750
       df.select("user_id").distinct().count() shouldBe 14073
@@ -47,7 +56,7 @@ class ReferenceDataSpec extends SparkSpec {
 
   test("star-schema dims over the real day match DISTINCT cardinalities") {
     val staged = RetailOps.fillNa(
-      Sources.rawEventsCsv(spark, root, "2019-10-05"),
+      rawDay("2019-10-05"),
       Map("category_code" -> "Unknown", "brand" -> "Generic"))
     // dim_product grain = product_id after deterministic dedup
     val dimProduct = RetailOps.dedupKeepFirst(
@@ -62,7 +71,7 @@ class ReferenceDataSpec extends SparkSpec {
   }
 
   test("fact build over the real day: revenue only from purchases, grain holds") {
-    val staged = Sources.rawEventsCsv(spark, root, "2019-10-05")
+    val staged = rawDay("2019-10-05")
     val fact = RetailOps.factBuild(staged, "event_date", "event_type",
       Seq("product_id", "user_id"), "price")
     val total = fact.agg(

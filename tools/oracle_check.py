@@ -3,7 +3,8 @@
 Spark library): for each query output under <outDir>, run the matching
 oracle SQL from oracle_sql.json in DuckDB over the same sf parquet tables,
 canonicalize both frames (column-name sort, row sort, 6-dp double rounding)
-and diff. Usage: oracle_check.py [--json FILE] <sfDir> <outDir> [query ...]
+and diff. An output directory without an oracle entry, or an oracle entry
+without output, fails. Usage: oracle_check.py [--json FILE] <sfDir> <outDir> [query ...]
 
 --json FILE additionally writes the driver-format correctness record
 (per-query rows_match/schema_match/hash_match/spark_rows/oracle_rows/err)
@@ -43,15 +44,21 @@ def main():
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    outputs = {e.name for e in os.scandir(out_dir) if e.is_dir()}
     n_ok = n_bad = 0
     record = {}
-    for name in sorted(oracle):
+    for name in sorted(set(oracle) | outputs):
         if only and name not in only:
             continue
         rec = {"rows_match": False, "schema_match": False,
                "hash_match": False, "spark_rows": 0, "oracle_rows": 0,
                "err": None}
         record[name] = rec
+        if name not in oracle:
+            print(f"FAIL  {name}: no oracle entry")
+            rec["err"] = "no oracle entry"
+            n_bad += 1
+            continue
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"MISS  {name}: no spark output")
